@@ -837,6 +837,36 @@ def lsh_operating_point(
     return bands, r
 
 
+def tau_pass(
+    d: np.ndarray, na2: np.ndarray, nb2: np.ndarray, tau_sq_pct: int
+) -> np.ndarray:
+    """Exact SemDeDup threshold mask over int64 dots ``d``: ``d > 0``
+    and ``d²·10⁴ ≥ τ²pct·|a|²·|b|²``, with the int64 squared norms
+    ``na2``/``nb2`` broadcast against ``d``. Both products pass 2⁵³, so
+    float64 alone misdecides pairs ON the threshold (exact twins at
+    τ² = 1.0, Pythagorean pairs at cos 0.8): float64 classifies every
+    pair outside a 1e-9 relative guard band — its rounding error is
+    ~1e-16 — and exact Python ints arbitrate the few inside it. The
+    same decision as the oracles' HUGEINT / decimal(38,0) test."""
+    tau = int(tau_sq_pct)
+    na2, nb2 = np.asarray(na2), np.asarray(nb2)
+    df = d.astype(np.float64)
+    lhs = df * df * 10000.0
+    rhs = (na2.astype(np.float64) * nb2.astype(np.float64)) * float(tau)
+    pos = d > 0
+    out = pos & (lhs > rhs * (1.0 + 1e-9))
+    border = pos & (lhs >= rhs * (1.0 - 1e-9)) & ~out
+    if border.any():
+        idx = np.nonzero(border)
+        a = np.broadcast_to(na2, d.shape)[idx].tolist()
+        b = np.broadcast_to(nb2, d.shape)[idx].tolist()
+        out[idx] = [
+            x * x * 10000 >= p * q * tau
+            for x, p, q in zip(d[idx].tolist(), a, b)
+        ]
+    return out
+
+
 def semdedup_lsh_drop_ids(
     vecs: DataFrame,
     dims: int,
@@ -896,7 +926,8 @@ def semdedup_lsh_drop_ids(
         ).alias("band", "bucket"),
     )
     verified = k.groupBy("band", "bucket").applyInPandas(
-        _verify_group_fn(tau_sq_pct, None), schema="drop_id long"
+        _verify_group_fn(tau_sq_pct, lambda g: _mat(g["v"])),
+        schema="drop_id long",
     )
     return verified.distinct()
 
@@ -950,7 +981,8 @@ def semdedup_drop_ids(
         sq_norm(F.col(vec_col)).alias("n2"),
     )
     verified = t.groupBy("bucket").applyInPandas(
-        _verify_group_fn(tau_sq_pct, None), schema="drop_id long"
+        _verify_group_fn(tau_sq_pct, lambda g: _mat(g["v"])),
+        schema="drop_id long",
     )
     return verified.distinct()
 
@@ -1095,7 +1127,11 @@ def train_pq_codebook(
         # fail fast on ragged books (ADVICE r13): the codes schema and
         # the bincount minlength below assume every subspace has keff
         # codes — a ragged list would silently mis-size the partials
-        assert all(len(b) == keff for b in books), "ragged PQ codebook"
+        if any(len(b) != keff for b in books):
+            raise ValueError(
+                f"ragged PQ codebook: subspace sizes "
+                f"{[len(b) for b in books]}, expected {keff} each"
+            )
         B = [np.array(b, dtype=np.int64) for b in books]
 
         def _stats(it):

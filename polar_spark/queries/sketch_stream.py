@@ -243,7 +243,11 @@ def sketch_kmv_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         for epoch, cond in enumerate(_SPLITS[:2]):
             sink.apply_batch(ev.filter(cond), epoch, root)
         folded, live = sink.compact()
-        assert folded == 2 and live == 1, (folded, live)
+        if (folded, live) != (2, 1):
+            raise RuntimeError(
+                f"KMV compaction folded {folded} partitions leaving "
+                f"{live} live; expected 2 and 1"
+            )
         sink.apply_batch(ev.filter(_SPLITS[2]), 2, root)
 
     _built_once(root, build)
@@ -275,7 +279,11 @@ def sketch_hll_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
         for epoch, cond in enumerate(_SPLITS):
             sink.apply_batch(ev.filter(cond), epoch, root)
         folded, live = sink.compact()
-        assert folded == 3 and live == 1, (folded, live)
+        if (folded, live) != (3, 1):
+            raise RuntimeError(
+                f"HLL compaction folded {folded} partitions leaving "
+                f"{live} live; expected 3 and 1"
+            )
         # at-least-once replay AFTER the fold: overlaps are a no-op
         sink.apply_batch(ev.filter(_SPLITS[0]), 3, root)
 

@@ -43,10 +43,11 @@ is computed in id-sorted row chunks (chunk size scales inversely with
 the sub-bucket so the matrix stays ~32 MB even under a dup-storm
 bucket), and the exact integer threshold test — the SAME
 ``d·d·10⁴ ≥ n2_a·n2_b·τ²pct`` decimal test the shuffle path applies —
-is decided by a float64 pre-classifier with a 1e-9 relative guard band
-plus exact Python-int arbitration of the (rare) borderline pairs, so
-the drop set is BIT-IDENTICAL to ``semdedup_lsh_drop_ids`` (pytest
-law). The only query-time exchange is the final ids-only ``distinct``.
+is decided by ``functions/similarity.tau_pass`` (a float64
+pre-classifier with a 1e-9 relative guard band plus exact Python-int
+arbitration of the rare borderline pairs), so the drop set is
+BIT-IDENTICAL to ``semdedup_lsh_drop_ids`` (pytest law). The only
+query-time exchange is the final ids-only ``distinct``.
 
 A pair colliding in k>1 bands is verified k times (once per band
 partition) instead of deduplicated first — that duplication factor is
@@ -70,9 +71,11 @@ exactly the shuffle wall this table exists to remove. Co-location is
 the only zero-Exchange layout for the full-corpus verify; the int16
 pack is the (lossless) version of the storage cut that preserves it.
 
-Pre-r13 tables (``v array<bigint>``, string buckets) stay readable:
-the verify branches on the store schema, and ``append_semlsh_index``
-emits whichever row shape the table already has.
+The packed layout above is the only one: every entry point reads the
+pinned properties through :func:`semlsh_index_params`, which raises
+``ValueError`` naming the table — rebuild it with
+:func:`write_semlsh_index` — for a table with no ``vq`` column (rows
+carrying ``v array<bigint>`` vectors) or without the full property set.
 
 Maintenance lifecycle (append → compact → swap) is crash-safe since
 r13: append/compact serialize on an flock next to the warehouse (the
@@ -100,6 +103,7 @@ from __future__ import annotations
 import contextlib
 import fcntl
 import os
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -108,9 +112,9 @@ from pyspark.sql import functions as F
 
 from polar_spark.functions.similarity import (
     lsh_band_bucket_ids,
-    lsh_band_buckets,
     pack_vec,
     sq_norm,
+    tau_pass,
     unpack_mat,
 )
 
@@ -133,51 +137,27 @@ def semlsh_store_df(
     id_col: str = "vec_id",
     vec_col: str = "v",
     vbytes: int = 2,
-    packed: bool = True,
 ) -> DataFrame:
-    """The exploded store rows — a narrow map over ``df`` (no shuffle).
-    ``df[vec_col]`` must already be quantized int64 (the
-    functions.similarity contract).
-
-    ``packed=True`` (the r13 layout): ``(band, bpre, bucket:long,
-    id, vq:binary, n2)`` with ``vq = pack_vec(v, vbytes)``.
-    ``packed=False`` reproduces the pre-r13 rows ``(band, bpre,
-    bucket:string, id, v:array<bigint>, n2)`` so appends into legacy
-    tables keep their schema."""
+    """The exploded store rows ``(band, bpre, bucket:long, id,
+    vq:binary, n2)`` with ``vq = pack_vec(v, vbytes)`` — a narrow map
+    over ``df`` (no shuffle). ``df[vec_col]`` must already be quantized
+    int64 (the functions.similarity contract)."""
     r = int(planes_per_band)
     k = min(int(prefix_bits), r)
-    if packed:
-        t = df.select(
-            F.col(id_col).alias("id"),
-            pack_vec(F.col(vec_col), vbytes).alias("vq"),
-            sq_norm(F.col(vec_col)).alias("n2"),
-            F.posexplode(
-                lsh_band_bucket_ids(vec_col, dims, bands, r)
-            ).alias("band", "bucket"),
-        )
-        return t.select(
-            "band",
-            F.shiftright("bucket", r - k).cast("int").alias("bpre"),
-            "bucket",
-            "id",
-            "vq",
-            "n2",
-        )
     t = df.select(
         F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
+        pack_vec(F.col(vec_col), vbytes).alias("vq"),
         sq_norm(F.col(vec_col)).alias("n2"),
         F.posexplode(
-            lsh_band_buckets(vec_col, dims, bands, r)
+            lsh_band_bucket_ids(vec_col, dims, bands, r)
         ).alias("band", "bucket"),
     )
-    # leading k bucket bits as an int: '1'/'0' strings → binary parse
     return t.select(
         "band",
-        F.conv(F.substring("bucket", 1, k), 2, 10).cast("int").alias("bpre"),
+        F.shiftright("bucket", r - k).cast("int").alias("bpre"),
         "bucket",
         "id",
-        "v",
+        "vq",
         "n2",
     )
 
@@ -304,8 +284,8 @@ def semlsh_index_params(spark: SparkSession, table: str) -> dict[str, int]:
     """The operating point pinned by :func:`write_semlsh_index`.
     Completes an interrupted compact swap first, so every read path
     self-heals (the canonical name is re-bound before any lookup can
-    fail). ``vbytes`` defaults to 2 for packed tables written before
-    the prop existed; legacy (array-vector) tables carry no pack."""
+    fail). A table not in the packed layout, or missing any pinned
+    property, raises ``ValueError``."""
     recover_semlsh_swap(spark, table)
     rows = spark.sql(f"SHOW TBLPROPERTIES {table}").collect()
     props = {
@@ -313,14 +293,21 @@ def semlsh_index_params(spark: SparkSession, table: str) -> dict[str, int]:
         for r in rows
         if r["key"].startswith("polar.semlsh.")
     }
-    required = {"dims", "bands", "planes_per_band", "prefix_bits", "num_buckets"}
+    required = {
+        "dims", "bands", "planes_per_band", "prefix_bits", "num_buckets",
+        "vbytes",
+    }
     missing = required - set(props)
     if missing:
         raise ValueError(
             f"table {table} is missing semlsh properties {sorted(missing)} "
-            "— was it written by write_semlsh_index?"
+            "— rebuild the store with write_semlsh_index"
         )
-    props.setdefault("vbytes", 2)
+    if "vq" not in spark.table(table).columns:
+        raise ValueError(
+            f"table {table} is not in the packed semlsh layout (no vq "
+            "column) — rebuild the store with write_semlsh_index"
+        )
     return props
 
 
@@ -349,7 +336,6 @@ def append_semlsh_index(
     spark = df.sparkSession
     with _store_lock(spark, table):
         p = semlsh_index_params(spark, table)
-        legacy = "vq" not in spark.table(table).columns
         rows = semlsh_store_df(
             df,
             p["dims"],
@@ -359,7 +345,6 @@ def append_semlsh_index(
             id_col,
             vec_col,
             vbytes=p["vbytes"],
-            packed=not legacy,
         )
         (
             rows.write.mode("append")
@@ -441,14 +426,15 @@ def compact_semlsh_index(
         }
 
 
-def _verify_group_fn(tau_sq_pct: int, vbytes: int | None):
-    """Per-(band,bpre)-group verifier: numpy pairwise dots per full
-    bucket, exact integer threshold, emits drop ids (higher id of every
-    verified pair — the keep-lowest policy of semdedup_lsh_drop_ids).
-    ``vbytes`` set → packed store rows (decode ``vq``); None → legacy
-    ``array<bigint>`` rows. Both decode to the same int64 matrix, so
-    the drop arithmetic is shared and bit-identical across layouts."""
-    tau = int(tau_sq_pct)
+def _verify_group_fn(
+    tau_sq_pct: int, mat: Callable[[pd.DataFrame], np.ndarray]
+):
+    """Per-group verifier: numpy pairwise dots per full bucket, exact
+    integer threshold (functions/similarity.tau_pass), emits drop ids
+    (higher id of every verified pair — the keep-lowest policy of
+    semdedup_lsh_drop_ids). ``mat`` decodes a bucket's rows into their
+    int64 vector matrix: packed ``vq`` for the stored index, the
+    ``array<bigint>`` column for the query-time forms."""
 
     def verify(pdf: pd.DataFrame) -> pd.DataFrame:
         drops: set[int] = set()
@@ -458,37 +444,20 @@ def _verify_group_fn(tau_sq_pct: int, vbytes: int | None):
                 continue
             g = g.sort_values("id")
             ids = g["id"].to_numpy()
-            if vbytes is not None:
-                V = unpack_mat(g["vq"], vbytes)
-            else:
-                V = np.stack(g["v"].to_numpy()).astype(np.int64, copy=False)
-            n2 = g["n2"].to_numpy().astype(np.float64)
-            n2i = g["n2"].tolist()
+            V = mat(g)
+            n2 = g["n2"].to_numpy().astype(np.int64, copy=False)
             chunk = max(1, _CHUNK_CELLS // m)
+            cols = np.arange(m)[None, :]
             for s in range(0, m, chunk):
                 e = min(s + chunk, m)
                 D = V[s:e] @ V.T  # exact int64 (quantize contract)
-                Df = D.astype(np.float64)
-                lhs = Df * Df * 10000.0
-                rhs = (n2[s:e, None] * n2[None, :]) * float(tau)
                 # strict upper triangle relative to the full matrix:
-                # row i (global s+li) vs columns j > s+li, d > 0 only
-                cols = np.arange(m)[None, :]
-                rows_g = np.arange(s, e)[:, None]
-                upper = (cols > rows_g) & (D > 0)
-                clear_pass = upper & (lhs > rhs * (1.0 + 1e-9))
-                border = (
-                    upper & (lhs >= rhs * (1.0 - 1e-9)) & ~clear_pass
+                # row i (global s+li) vs columns j > s+li
+                upper = cols > np.arange(s, e)[:, None]
+                hit = upper & tau_pass(
+                    D, n2[s:e, None], n2[None, :], tau_sq_pct
                 )
-                for j in np.unique(np.nonzero(clear_pass)[1]):
-                    drops.add(int(ids[j]))
-                if border.any():
-                    bi, bj = np.nonzero(border)
-                    for li, j in zip(bi.tolist(), bj.tolist()):
-                        i = s + li
-                        d = int(D[li, j])
-                        if d * d * 10000 >= int(n2i[i]) * int(n2i[j]) * tau:
-                            drops.add(int(ids[j]))
+                drops.update(ids[np.unique(np.nonzero(hit)[1])].tolist())
         return pd.DataFrame({"drop_id": sorted(drops)}, dtype="int64")
 
     return verify
@@ -502,15 +471,10 @@ def semdedup_lsh_drop_ids_stored(
     """Distinct ids to DROP, verified partition-locally over the stored
     index — bit-identical to ``semdedup_lsh_drop_ids`` on the same
     corpus/bands/planes (tests/test_semlsh_index.py law), with the only
-    query-time Exchange being the final ids-only ``distinct``. Reads
-    both the packed (r13) and the legacy array-vector layout."""
-    recover_semlsh_swap(spark, table)
-    store = spark.table(table)
-    if "vq" in store.columns:
-        vbytes = semlsh_index_params(spark, table)["vbytes"]
-    else:
-        vbytes = None  # pre-r13 layout: v array<bigint>
-    verified = store.groupBy("band", "bpre").applyInPandas(
-        _verify_group_fn(tau_sq_pct, vbytes), schema="drop_id long"
+    query-time Exchange being the final ids-only ``distinct``."""
+    vbytes = semlsh_index_params(spark, table)["vbytes"]
+    verified = spark.table(table).groupBy("band", "bpre").applyInPandas(
+        _verify_group_fn(tau_sq_pct, lambda g: unpack_mat(g["vq"], vbytes)),
+        schema="drop_id long",
     )
     return verified.distinct()

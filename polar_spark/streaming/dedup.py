@@ -406,7 +406,7 @@ class StreamingSemDedup:
 
         from pyspark.sql import functions as F
 
-        from polar_spark.functions.similarity import ivf_cell
+        from polar_spark.functions.similarity import ivf_cell, tau_pass
 
         key = _sink_instance_key(sink_id)
         last = self._epochs.last(key)
@@ -443,33 +443,25 @@ class StreamingSemDedup:
                     {"vec_id": "int64", "keep": "int32"}
                 )
             b = bpdf.sort_values("vec_id")
-            V = np.stack(b["v"].to_numpy()).astype(np.float64)
+            V = np.stack(b["v"].to_numpy()).astype(np.int64)
             nb = (V * V).sum(axis=1)
             if len(spdf):
-                S = np.stack(spdf["v"].to_numpy()).astype(np.float64)
+                S = np.stack(spdf["v"].to_numpy()).astype(np.int64)
                 ns = (S * S).sum(axis=1)
             else:
-                S = np.empty((0, V.shape[1]))
-                ns = np.empty(0)
+                S = np.empty((0, V.shape[1]), dtype=np.int64)
+                ns = np.empty(0, dtype=np.int64)
             kept_rows: list[int] = []
             keep_flags = np.ones(len(b), dtype=np.int32)
             for i in range(len(b)):
                 v, n2 = V[i], nb[i]
-                # quantized int dots are < 2^53, exact in float64; the
-                # threshold test d²·10⁴ ≥ τ²10⁴·|u|²·|v|² is the same
-                # deterministic arithmetic as semdedup_drop_ids
-                dup = False
-                if len(S):
-                    d = S @ v
-                    if ((d > 0) & (d * d * 10000 >= tau * ns * n2)).any():
-                        dup = True
+                # exact int64 dots, and the same exact threshold test
+                # as semdedup_drop_ids (functions/similarity.tau_pass)
+                dup = bool(len(S)) and tau_pass(S @ v, ns, n2, tau).any()
                 if not dup and kept_rows:
-                    K = V[kept_rows]
-                    d = K @ v
-                    if (
-                        (d > 0) & (d * d * 10000 >= tau * nb[kept_rows] * n2)
-                    ).any():
-                        dup = True
+                    dup = tau_pass(
+                        V[kept_rows] @ v, nb[kept_rows], n2, tau
+                    ).any()
                 if dup:
                     keep_flags[i] = 0
                 else:
@@ -620,16 +612,14 @@ class StreamingSemDedupLSH:
     (functions/similarity.lsh_band_buckets): per-trigger pair work is
     O(batch · bands + true dups), independent of store size.
 
-    Store layout (v3, r13 — VERDICT r12 ask #1): band rows are
+    Store layout — the only one this sink reads: band rows are
     IDS-ONLY — ``(bucket:int64, vec_id)`` under (band, bucket-prefix)
     directory partitions — and each kept VECTOR is stored exactly ONCE
-    in the kept-vectors table. The r11/r12 layout co-located a full
-    vector copy in every band row, a measured 23-35× byte amplification
-    of the corpus at real operating points (~30 GB at 8M vectors; it
-    capped the r12 trigger sweep at 8M on this host's disk) — and since
+    in the kept-vectors table. A vector copy in every band row would
+    amplify the corpus bytes 23-35× at real operating points, and since
     a realistic batch occupies nearly every (band, bpre) partition, the
-    per-trigger pruned read effectively re-scanned those bands× bytes
-    every trigger. Ids-only rows cut BOTH: store bytes fall to
+    per-trigger pruned read would re-scan those bands× bytes every
+    trigger. Ids-only rows cut BOTH: store bytes fall to
     ~bands·16 B/vector (≈ 1× the corpus bytes at dims 64) plus the 1×
     vector payload, and the per-trigger read is the slim key store plus
     ONE id-join against the kept-vectors table for just the MATCHED
@@ -655,7 +645,13 @@ class StreamingSemDedupLSH:
     Exactly-once: identical ``ep=<tag>`` discipline to the other sinks
     in this module (stable per-epoch partitions a replay overwrites;
     the replayed epoch's store partitions are excluded from its own
-    read; EpochLedger gates re-application)."""
+    read; EpochLedger gates re-application).
+
+    Fail closed: the layout version is pinned in ``_store_format.json``
+    next to the epoch ledger. A store whose marker names another
+    version, whose marker is unreadable, or which holds epoch data but
+    no marker raises ``ValueError`` naming ``index_path`` — rebuild it
+    by re-ingesting the corpus into a fresh ``index_path``."""
 
     def __init__(
         self,
@@ -699,89 +695,54 @@ class StreamingSemDedupLSH:
         self._epochs = EpochLedger(index_path)
         self._format_marker = os.path.join(index_path, "_store_format.json")
 
-    # bands-store physical layout version. v3 (r13): (band, bpre)
-    # directory partitions of IDS-ONLY rows (bucket:int64, vec_id) —
-    # vectors live once in the kept-vectors table. v2 (r11): the same
-    # partitioning with v array<bigint> + n2 co-located and string
-    # buckets. v1 (r10, unmarked): flat per-epoch files of (vec_id,
-    # band, bucket). Mixed layouts under one store break Spark
-    # partition discovery and the join key types, so the version is
-    # pinned in a marker file alongside the epoch ledger (ADVICE r11),
-    # and any pre-v3 data triggers ONE full rebuild from the
-    # kept-vectors table — rebuilding everything (not just the
-    # detected-legacy epochs) is what makes a MIXED store (flat v1
-    # dirs next to partitioned v2 dirs) come out duplicate-free
-    # (ADVICE r12).
+    # bands-store physical layout version, pinned in a marker file
+    # next to the epoch ledger: (band, bpre) directory partitions of
+    # ids-only rows (bucket:int64, vec_id), vectors once in the
+    # kept-vectors table. It is the only layout this sink reads.
     _FORMAT_VERSION = 3
 
     def pin_current_format(self) -> None:
         """Pin the marker for a store KNOWN to be in the current
-        layout — the normal tail of :meth:`_ensure_format`, and the
-        entry point for bulk-seeding tools that write packed band rows
-        directly (tools/measure_semlsh_trigger.py) so the first
-        apply_batch doesn't re-derive what the seeder just wrote."""
+        layout — what :meth:`_ensure_format` does for a fresh store, and
+        the entry point for bulk-seeding tools that write band rows
+        directly (tools/measure_semlsh_trigger.py). The marker is
+        fsynced before the rename, so a crash never leaves a truncated
+        one behind."""
         os.makedirs(self.index_path, exist_ok=True)
         tmp = self._format_marker + ".tmp"
         with open(tmp, "w") as f:
             json.dump({"bands_layout": self._FORMAT_VERSION}, f)
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, self._format_marker)
 
     def _ensure_format(self) -> None:
-        """Pin or reconcile the bands-store layout version. Any pre-v3
-        data — the r10 flat layout, the r11/r12 array-vector partitions,
-        or a mix — is rebuilt in place from the kept-vectors table (the
-        source of truth; bands rows are derived data). A store from a
-        NEWER format version, or one packed at a different width than
-        this sink, fails loudly instead of mis-reading. A truncated or
-        corrupted marker (e.g. a disk-full partial write) is treated as
-        unversioned so the reconcile path runs instead of crashing
-        every subsequent apply_batch (ADVICE r12)."""
+        """Fail closed on any store not in the current layout: a marker
+        at the current version passes; an unmarked store with no epoch
+        data yet is pinned; anything else — an unmarked store that
+        already holds data, another version, an unreadable marker —
+        raises ``ValueError`` asking for a rebuild."""
         try:
             with open(self._format_marker) as f:
-                m = json.load(f)
-            ver = int(m.get("bands_layout", 0))
-            if ver > self._FORMAT_VERSION:
-                raise RuntimeError(
-                    f"bands store at {self.bands_path} was written by "
-                    f"layout v{ver}; this build reads v"
-                    f"{self._FORMAT_VERSION} — upgrade the engine or "
-                    "rebuild the store"
-                )
-            if ver == self._FORMAT_VERSION:
-                return
+                ver = json.load(f).get("bands_layout")
         except FileNotFoundError:
-            pass
-        except (json.JSONDecodeError, ValueError, KeyError, TypeError):
-            pass  # corrupt marker → reconcile as unversioned (below)
-        stale = False
-        if os.path.isdir(self.bands_path):
-            eps = [
-                e
-                for e in os.scandir(self.bands_path)
-                if e.is_dir() and e.name.startswith("ep=")
-            ]
-            flat = []
-            for ep in eps:
-                entries = list(os.scandir(ep.path))
-                if any(e.name.startswith("band=") for e in entries):
-                    continue  # partitioned; schema checked below
-                # "."/"_"-prefixed names are Hadoop metadata (_SUCCESS,
-                # ._SUCCESS.crc) — an all-dropped epoch writes only
-                # those; any real DATA outside band= dirs is v1-flat
-                if any(not e.name.startswith(("_", ".")) for e in entries):
-                    flat.append(ep.path)
-            if flat:
-                stale = True
-            elif eps:
-                try:
-                    cols = self.spark.read.parquet(self.bands_path).columns
-                    # v2 co-located vectors (or any interim packed form)
-                    stale = bool({"v", "vq"} & set(cols))
-                except Exception:
-                    stale = True  # unreadable/mixed → rebuild from truth
-        if stale:
-            self._rebuild_bands_store()
-        self.pin_current_format()
+            if not any(
+                os.path.isdir(p)
+                and any(e.name.startswith("ep=") for e in os.scandir(p))
+                for p in (self.bands_path, self.vectors_path)
+            ):
+                self.pin_current_format()
+                return
+            ver = "unmarked"
+        except (ValueError, AttributeError):
+            ver = "unreadable"
+        if ver != self._FORMAT_VERSION:
+            raise ValueError(
+                f"semantic-dedup store at {self.index_path} has bands "
+                f"layout {ver!r}; this build reads only layout "
+                f"{self._FORMAT_VERSION} — rebuild the store by "
+                "re-ingesting the corpus into a fresh index_path"
+            )
 
     def _band_key_rows(self, df: "DataFrame") -> "DataFrame":
         """Ids-only band-key rows ``(band, bpre, bucket, vec_id)`` for
@@ -807,45 +768,6 @@ class StreamingSemDedupLSH:
             )
             .select("band", "bpre", "bucket", "vec_id")
         )
-
-    def _rebuild_bands_store(self) -> None:
-        """One-time rebuild of a pre-v3 bands store into the ids-only
-        (band, bpre)-partitioned layout, from the kept-vectors table
-        (which every version of this sink has maintained). ALL existing
-        epoch dirs are replaced by one ``ep=migrated`` partition —
-        rebuilding the whole derived store (rather than only the
-        detected-legacy epochs) is what keeps a mixed v1/v2 store from
-        ending up with duplicate band rows (ADVICE r12). Write the
-        rebuilt partition FIRST, delete the old dirs after — a crash in
-        between re-runs the (idempotent) rebuild on next start."""
-        import shutil
-
-        if not os.path.isdir(self.vectors_path) or not any(
-            e.name.startswith("ep=") for e in os.scandir(self.vectors_path)
-        ):
-            raise RuntimeError(
-                f"bands store at {self.bands_path} uses a pre-v3 flat "
-                "layout and no kept-vectors table exists to rebuild from "
-                f"({self.vectors_path}); migrate by re-ingesting the "
-                "corpus into a fresh index_path"
-            )
-        old = [
-            ep.path
-            for ep in os.scandir(self.bands_path)
-            if ep.is_dir()
-            and ep.name.startswith("ep=")
-            and ep.name != "ep=migrated"
-        ]
-        vecs = self.spark.read.parquet(self.vectors_path).select("vec_id", "v")
-        (
-            self._band_key_rows(vecs)
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .partitionBy("band", "bpre")
-            .parquet(os.path.join(self.bands_path, "ep=migrated"))
-        )
-        for d in old:
-            shutil.rmtree(d, ignore_errors=True)
 
     def _stored(self, path: str, exclude_tag: str) -> DataFrame | None:
         from pyspark.sql import functions as F

@@ -277,48 +277,48 @@ def test_store_rows_shape(spark, tmp_path, qv):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
-def test_legacy_array_layout_still_reads(spark, tmp_path, qv):
-    """Backward compat: a pre-r13 table (string buckets, array<bigint>
-    vectors, no vbytes prop) verifies to the SAME drop set as the
-    packed layout, and append into it keeps the legacy row shape."""
-    from polar_spark.sources.semlsh_index import (
-        append_semlsh_index,
-        semlsh_store_df,
-    )
+def test_array_vector_layout_refused(spark, tmp_path, qv):
+    """Only the packed layout is read: a table of array-vector rows
+    (``v array<bigint>``, string buckets, no ``vq``) is refused by both
+    append and verify with a ValueError naming the table and asking for
+    a rebuild, even when every operating-point property is pinned."""
+    from polar_spark.functions.similarity import lsh_band_buckets
+    from polar_spark.sources.semlsh_index import append_semlsh_index
 
-    rows = semlsh_store_df(
-        qv.filter(F.col("vec_id") % 2 == 0), 64, 16, 4, prefix_bits=4,
-        packed=False,
+    rows = qv.select(
+        F.col("vec_id").alias("id"),
+        "v",
+        F.posexplode(lsh_band_buckets("v", 64, 16, 4)).alias("band", "bucket"),
+    ).select(
+        "band",
+        F.conv(F.substring("bucket", 1, 4), 2, 10).cast("int").alias("bpre"),
+        "bucket",
+        "id",
+        "v",
     )
     (
         rows.write.mode("overwrite")
         .bucketBy(32, "band", "bpre")
         .sortBy("band", "bpre")
-        .option("path", str(tmp_path / "legacy"))
+        .option("path", str(tmp_path / "arrayvec"))
         .format("parquet")
-        .saveAsTable("semlsh_legacy")
+        .saveAsTable("semlsh_arrayvec")
     )
     spark.sql(
-        "ALTER TABLE semlsh_legacy SET TBLPROPERTIES ("
+        "ALTER TABLE semlsh_arrayvec SET TBLPROPERTIES ("
         "'polar.semlsh.dims'='64','polar.semlsh.bands'='16',"
         "'polar.semlsh.planes_per_band'='4','polar.semlsh.prefix_bits'='4',"
-        "'polar.semlsh.num_buckets'='32')"
+        "'polar.semlsh.num_buckets'='32','polar.semlsh.vbytes'='2')"
     )
     try:
-        append_semlsh_index(qv.filter(F.col("vec_id") % 2 == 1), "semlsh_legacy")
-        tbl = spark.table("semlsh_legacy")
-        assert dict(tbl.dtypes)["v"] == "array<bigint>"  # shape preserved
-        legacy = _drops(
-            semdedup_lsh_drop_ids_stored(spark, "semlsh_legacy", 1600)
-        )
-        shuffled = _drops(
-            semdedup_lsh_drop_ids(
-                qv, 64, bands=16, planes_per_band=4, tau_sq_pct=1600
-            )
-        )
-        assert legacy == shuffled and len(legacy) > 0
+        n = spark.table("semlsh_arrayvec").count()
+        with pytest.raises(ValueError, match="semlsh_arrayvec.*rebuild"):
+            append_semlsh_index(qv.limit(5), "semlsh_arrayvec")
+        with pytest.raises(ValueError, match="semlsh_arrayvec.*rebuild"):
+            semdedup_lsh_drop_ids_stored(spark, "semlsh_arrayvec", 1600)
+        assert spark.table("semlsh_arrayvec").count() == n
     finally:
-        spark.sql("DROP TABLE IF EXISTS semlsh_legacy")
+        spark.sql("DROP TABLE IF EXISTS semlsh_arrayvec")
 
 
 def test_pack_overflow_raises(spark):

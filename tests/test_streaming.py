@@ -5,6 +5,8 @@ streaming form)."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from polar_spark.consume import EARLIEST, ConsumerGroup
@@ -691,6 +693,88 @@ def test_streaming_semdedup_matches_greedy_reference(spark, sf_dir, tmp_path):
     assert sd.apply_batch(replay, 1, cp) is False
     assert sd.kept().count() == n_store
     qv.unpersist()
+
+
+# (p, q, h) with p² + q² = h²: a = k·(p, q) and b = m·(h, 0) sit at
+# cos = p/h EXACTLY, and τ²·10⁴ = 10⁴·p²/h² is an integer
+_EXACT_COS = [(3, 4, 5), (4, 3, 5), (7, 24, 25), (24, 7, 25), (1, 0, 1)]
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    triple=st.sampled_from(_EXACT_COS),
+    pairs=st.lists(
+        st.tuples(
+            st.integers(min_value=1, max_value=32000),
+            st.integers(min_value=1, max_value=32000),
+            st.sampled_from([-1, 0, 1]),
+        ),
+        min_size=64,
+        max_size=64,
+    ),
+    split=st.floats(min_value=0.0, max_value=1.0),
+)
+def test_streaming_semdedup_exact_threshold_property(
+    spark, triple, pairs, split
+):
+    """The IVF-cell sink decides d²·10⁴ ≥ τ²·|a|²·|b|² exactly — both
+    products pass 2⁵³ at quantized magnitudes. Each planted pair sits
+    exactly on the threshold (δ = 0) or one unit below or above it
+    (b's off-axis component δ = ±1), on its own two dims so pairs never
+    interact; part of the b side arrives in a second epoch (the stored
+    side of the greedy). Components stay ≤ 32000. The drop set must
+    equal a Python-int greedy."""
+    import shutil
+    import tempfile
+
+    from polar_spark.streaming.dedup import StreamingSemDedup
+
+    p, q, h = triple
+    tau = 10000 * p * p // (h * h)
+    dims = 2 * len(pairs)
+    rows = []
+    for j, (uk, um, delta) in enumerate(pairs):
+        k = 1 + (uk - 1) % (32000 // max(p, q))
+        m = 1 + (um - 1) % (32000 // h)
+        a, b = [0] * dims, [0] * dims
+        a[2 * j], a[2 * j + 1] = k * p, k * q
+        b[2 * j], b[2 * j + 1] = m * h, delta
+        rows += [(2 * j, a), (2 * j + 1, b)]
+    cut = int(split * len(pairs))
+    epochs = [
+        [r for r in rows if r[0] % 2 == 0 or r[0] < 2 * cut],
+        [r for r in rows if r[0] % 2 == 1 and r[0] >= 2 * cut],
+    ]
+
+    def passes(u, v):
+        d = sum(x * y for x, y in zip(u, v))
+        return d > 0 and d * d * 10000 >= tau * sum(
+            x * x for x in u
+        ) * sum(y * y for y in v)
+
+    kept: list[list[int]] = []
+    want = set()
+    for ep in epochs:
+        for vid, v in ep:
+            if any(passes(u, v) for u in kept):
+                want.add(vid)
+            else:
+                kept.append(v)
+
+    root = tempfile.mkdtemp(prefix="semdedup_exact_")
+    try:
+        sd = StreamingSemDedup(
+            spark, f"{root}/idx", f"{root}/drops", [(0, [0] * dims)],
+            tau_sq_pct=tau,
+        )
+        for epoch, ep in enumerate(epochs):
+            if ep:
+                batch = spark.createDataFrame(ep, "vec_id long, v array<bigint>")
+                assert sd.apply_batch(batch, epoch, f"{root}/cp") is True
+        got = {r["vec_id"] for r in sd.dropped().collect()}
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    assert got == want
 
 
 def test_streaming_semdedup_lsh_matches_banded_greedy_reference(
@@ -1693,237 +1777,51 @@ def test_streaming_semdedup_lsh_empty_epoch_advances_ledger(spark, tmp_path):
     assert sorted(r["vec_id"] for r in sd.dropped().collect()) == [10]
 
 
-def test_streaming_semdedup_lsh_legacy_store_migrates(spark, tmp_path):
-    """ADVICE r11 (medium): a stream resuming over a store written by
-    the pre-r11 FLAT bands layout (vec_id/band/bucket files, vectors in
-    a separate table, no band=/bpre= dirs) must not fail partition
-    discovery or miss cross-batch dups — the sink detects the legacy
-    layout, rebuilds the exploded store from the kept-vectors table
-    (the source of truth), and pins a format-version marker so the
-    check is one stat() thereafter."""
-    import json
+@pytest.mark.parametrize(
+    "marker",
+    [None, '{"bands_layout": 2}', '{"bands_layout": 4}', '{"bands_layout": '],
+    ids=["unmarked_with_data", "marker_v2", "marker_v4", "truncated_marker"],
+)
+def test_streaming_semdedup_lsh_non_current_store_fails_closed(
+    spark, tmp_path, marker
+):
+    """Only the current bands layout is read: a store that holds data
+    but no marker, a marker naming another version, or an unreadable
+    marker refuses apply_batch AND compact with a ValueError naming the
+    store and asking for a rebuild — nothing is read or rewritten."""
     import os
-    import shutil
 
     from polar_spark.streaming.dedup import StreamingSemDedupLSH
 
     def vec(seed: int) -> list[int]:
         return [((seed * 7 + j * 13) % 11 - 5) * 1000 for j in range(64)]
 
-    idx, drops = str(tmp_path / "mig_idx"), str(tmp_path / "mig_drops")
-    sd = StreamingSemDedupLSH(
-        spark, idx, drops, dims=64, bands=8, planes_per_band=8,
-        tau_sq_pct=9025,
-    )
-    b1 = spark.createDataFrame(
-        [(i, vec(i)) for i in range(40)], "vec_id long, v array<bigint>"
-    )
-    assert sd.apply_batch(b1, 0, "mig_law") is True
+    def sink():
+        return StreamingSemDedupLSH(
+            spark, str(tmp_path / "idx"), str(tmp_path / "drops"),
+            dims=64, bands=8, planes_per_band=8, tau_sq_pct=9025,
+        )
 
-    # devolve the bands store to the legacy flat layout: one ep dir of
-    # bare (vec_id, band, bucket) files, vectors only in vectors/
-    legacy_rows = (
-        spark.read.parquet(sd.bands_path)
-        .select("vec_id", "band", "bucket")
+    sd = sink()
+    b1 = spark.createDataFrame(
+        [(i, vec(i)) for i in range(20)], "vec_id long, v array<bigint>"
     )
-    legacy_pdf = legacy_rows.toPandas()
-    shutil.rmtree(sd.bands_path)
-    spark.createDataFrame(legacy_pdf).write.parquet(
-        os.path.join(sd.bands_path, "ep=legacy0")
-    )
+    assert sd.apply_batch(b1, 0, "fail_closed") is True
     os.remove(sd._format_marker)
+    if marker is not None:
+        with open(sd._format_marker, "w") as f:
+            f.write(marker)
+    kept_before = sd.kept().count()
 
-    # a fresh sink instance (the resumed stream) must migrate, then
-    # catch an exact copy of a kept id as an external dup
-    sd2 = StreamingSemDedupLSH(
-        spark, idx, drops, dims=64, bands=8, planes_per_band=8,
-        tau_sq_pct=9025,
-    )
-    kept_one = sd2.kept().limit(1).collect()[0]
-    b2 = spark.createDataFrame(
-        [(1000, list(kept_one["v"]))], "vec_id long, v array<bigint>"
-    )
-    assert sd2.apply_batch(b2, 1, "mig_law") is True
-    assert 1000 in {r["vec_id"] for r in sd2.dropped().collect()}
-    # marker pinned, legacy dir gone, every ep dir is partitioned
-    with open(sd2._format_marker) as f:
-        assert json.load(f)["bands_layout"] == sd2._FORMAT_VERSION
-    for ep in os.scandir(sd2.bands_path):
-        if ep.is_dir() and ep.name.startswith("ep="):
-            entries = list(os.scandir(ep.path))
-            # an all-dropped epoch writes only _SUCCESS/._SUCCESS.crc
-            # metadata; any DATA must live under band= directories
-            assert any(
-                e.name.startswith("band=") for e in entries
-            ) or all(
-                e.name.startswith(("_", ".")) for e in entries
-            ), ep.path
-
-
-def _mk_lsh_sink(spark, tmp_path, name):
-    from polar_spark.streaming.dedup import StreamingSemDedupLSH
-
-    return StreamingSemDedupLSH(
-        spark, str(tmp_path / f"{name}_idx"), str(tmp_path / f"{name}_drops"),
-        dims=64, bands=8, planes_per_band=8, tau_sq_pct=9025,
-    )
-
-
-def _lsh_vec(seed: int) -> list[int]:
-    return [((seed * 7 + j * 13) % 11 - 5) * 1000 for j in range(64)]
-
-
-def _devolve_to_v2(spark, sd) -> None:
-    """Rewrite a sink's packed bands store as the r11/r12 array-vector
-    partitioned layout (string buckets, v array<bigint>) and unpin the
-    marker — the state a store written by the pre-r13 engine is in."""
-    import os
-    import shutil
-
-    from polar_spark.functions.similarity import lsh_band_buckets
-
-    vecs = spark.read.parquet(sd.vectors_path).select("vec_id", "v", "n2")
-    v2 = vecs.select(
-        "vec_id", "v", "n2",
-        F.posexplode(
-            lsh_band_buckets("v", 64, sd.bands, sd.planes_per_band)
-        ).alias("band", "bucket"),
-    ).withColumn(
-        "bpre",
-        F.conv(F.substring("bucket", 1, sd.prefix_bits), 2, 10).cast("int"),
-    ).select("band", "bpre", "bucket", "vec_id", "v", "n2")
-    pdf = v2.toPandas()
-    shutil.rmtree(sd.bands_path)
-    spark.createDataFrame(pdf).write.partitionBy("band", "bpre").parquet(
-        os.path.join(sd.bands_path, "ep=old0")
-    )
-    os.remove(sd._format_marker)
-
-
-def test_streaming_semdedup_lsh_v2_store_migrates_to_ids_only(spark, tmp_path):
-    """A store written by the r11/r12 co-located-vector partitioned
-    layout (marker absent or pre-v3) is rebuilt into the ids-only
-    layout from the kept-vectors table on the next apply_batch, after
-    which cross-batch dups are still caught and no band row carries a
-    vector payload."""
-    import json
-    import os
-
-    sd = _mk_lsh_sink(spark, tmp_path, "v2mig")
-    b1 = spark.createDataFrame(
-        [(i, _lsh_vec(i)) for i in range(40)], "vec_id long, v array<bigint>"
-    )
-    assert sd.apply_batch(b1, 0, "v2mig_law") is True
-    n_band_rows = spark.read.parquet(sd.bands_path).count()
-    _devolve_to_v2(spark, sd)
-
-    sd2 = _mk_lsh_sink(spark, tmp_path, "v2mig")
-    kept_one = sd2.kept().limit(1).collect()[0]
-    b2 = spark.createDataFrame(
-        [(1000, list(kept_one["v"]))], "vec_id long, v array<bigint>"
-    )
-    assert sd2.apply_batch(b2, 1, "v2mig_law") is True
-    assert 1000 in {r["vec_id"] for r in sd2.dropped().collect()}
-    with open(sd2._format_marker) as f:
-        m = json.load(f)
-    assert m["bands_layout"] == sd2._FORMAT_VERSION
-    store = spark.read.parquet(sd2.bands_path)
-    assert not ({"v", "vq", "n2"} & set(store.columns))
-    # rebuild + the dup-free second epoch: no row inflation
-    assert store.count() == n_band_rows
-    assert not os.path.isdir(os.path.join(sd2.bands_path, "ep=old0"))
-
-
-def test_streaming_semdedup_lsh_mixed_store_no_duplicates(spark, tmp_path):
-    """ADVICE r12: a store MIXING a v1 flat epoch with partitioned
-    epochs must migrate to exactly one band row per (vec_id, band) —
-    the r12 migration rebuilt the whole corpus but deleted only the
-    flat dirs, silently doubling every vector's band rows."""
-    import os
-    import shutil
-
-    sd = _mk_lsh_sink(spark, tmp_path, "mixed")
-    b1 = spark.createDataFrame(
-        [(i, _lsh_vec(i)) for i in range(30)], "vec_id long, v array<bigint>"
-    )
-    assert sd.apply_batch(b1, 0, "mixed_law") is True
-    packed = spark.read.parquet(sd.bands_path)
-    n_rows, n_vecs = packed.count(), sd.kept().count()
-    # graft a v1 FLAT epoch alongside the (now-v3) partitioned one
-    flat = packed.select("vec_id", "band", F.col("bucket").cast("string"))
-    flat_pdf = flat.limit(40).toPandas()
-    spark.createDataFrame(flat_pdf).write.parquet(
-        os.path.join(sd.bands_path, "ep=flatlegacy")
-    )
-    os.remove(sd._format_marker)
-
-    sd2 = _mk_lsh_sink(spark, tmp_path, "mixed")
-    b2 = spark.createDataFrame(
-        [(2000, _lsh_vec(997))], "vec_id long, v array<bigint>"
-    )
-    assert sd2.apply_batch(b2, 1, "mixed_law") is True
-    store = spark.read.parquet(sd2.bands_path)
-    per_vec_band = (
-        store.groupBy("vec_id", "band").count().filter(F.col("count") > 1)
-    )
-    assert per_vec_band.count() == 0  # duplicate-free after migration
-    # old corpus exactly once, plus the new vector's rows iff it was
-    # kept (_lsh_vec has period 11 in seed, so 997 ≡ 7 mod 11 is an
-    # exact dup of a kept vector and gets dropped)
-    kept_new = 2000 in {r["vec_id"] for r in sd2.kept().collect()}
-    assert store.count() == n_rows + (sd2.bands if kept_new else 0)
-    shutil.rmtree(str(tmp_path / "mixed_idx"), ignore_errors=True)
-
-
-def test_streaming_semdedup_lsh_corrupt_marker_reconciles(spark, tmp_path):
-    """ADVICE r12: a truncated/corrupted _store_format.json (disk-full
-    partial write) must not permanently fail apply_batch — the sink
-    treats the store as unversioned, reconciles (the packed store scans
-    clean, so no rebuild), and re-pins the marker."""
-    import json
-
-    sd = _mk_lsh_sink(spark, tmp_path, "cmark")
-    b1 = spark.createDataFrame(
-        [(i, _lsh_vec(i)) for i in range(20)], "vec_id long, v array<bigint>"
-    )
-    assert sd.apply_batch(b1, 0, "cmark_law") is True
-    with open(sd._format_marker, "w") as f:
-        f.write('{"bands_layout": ')  # truncated mid-write
-    sd2 = _mk_lsh_sink(spark, tmp_path, "cmark")
-    kept_one = sd2.kept().limit(1).collect()[0]
-    b2 = spark.createDataFrame(
-        [(1000, list(kept_one["v"]))], "vec_id long, v array<bigint>"
-    )
-    assert sd2.apply_batch(b2, 1, "cmark_law") is True
-    assert 1000 in {r["vec_id"] for r in sd2.dropped().collect()}
-    with open(sd2._format_marker) as f:
-        assert json.load(f)["bands_layout"] == sd2._FORMAT_VERSION
-
-
-def test_streaming_semdedup_lsh_legacy_without_vectors_fails(
-    spark, tmp_path
-):
-    """A legacy bands store with NO kept-vectors table to rebuild from
-    must fail with an explicit migration error, not silently disable
-    cross-batch dedup."""
-    import os
-
-    import pytest as _pytest
-
-    from polar_spark.streaming.dedup import StreamingSemDedupLSH
-
-    idx, drops = str(tmp_path / "nv_idx"), str(tmp_path / "nv_drops")
-    sd = StreamingSemDedupLSH(
-        spark, idx, drops, dims=64, bands=4, planes_per_band=4,
-    )
-    spark.createDataFrame(
-        [(1, 0, "0101")], "vec_id long, band int, bucket string"
-    ).write.parquet(os.path.join(sd.bands_path, "ep=legacy0"))
-    b = spark.createDataFrame(
-        [(7, [1000] * 64)], "vec_id long, v array<bigint>"
-    )
-    with _pytest.raises(RuntimeError, match="flat layout"):
-        sd.apply_batch(b, 0, "nv_law")
+    sd2 = sink()
+    b2 = spark.createDataFrame([(1000, vec(3))], "vec_id long, v array<bigint>")
+    with pytest.raises(ValueError, match="rebuild the store") as e:
+        sd2.apply_batch(b2, 1, "fail_closed")
+    assert sd2.index_path in str(e.value)
+    with pytest.raises(ValueError, match="rebuild the store"):
+        sd2.compact()
+    assert sd2.kept().count() == kept_before
+    assert 1000 not in {r["vec_id"] for r in sd2.dropped().collect()}
 
 
 def test_semdedup_sink_auto_crossover(spark, tmp_path):
